@@ -4084,14 +4084,14 @@ def q181_backtest_mape(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q182_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
-    """Personalized PageRank (operators/graph.personalized_pagerank):
-    the q109 trade graph re-ranked with ALL teleport mass returning to
-    one nation's customers — "which suppliers (and customers) are
-    closest to NATION_7's customer base", the seed-set-similarity
-    ranking recommenders use. Same BIGINT floor-division fixed point
-    as q109, so the oracle unrolls the SAME 3 iterations as CTEs and
-    value-hash-checks the personalized variant too. Top-20 by
-    (rank, node)."""
+    """Personalized PageRank (operators/graph.pagerank_fixedpoint with a
+    seed set): the q109 trade graph re-ranked with ALL teleport mass
+    returning to one nation's customers — "which suppliers (and
+    customers) are closest to NATION_7's customer base", the
+    seed-set-similarity ranking recommenders use. Same BIGINT
+    floor-division fixed point as q109, so the oracle unrolls the SAME
+    3 iterations as CTEs and value-hash-checks the personalized variant
+    too. Top-20 by (rank, node)."""
     from nyc_taxi_data_prediction_pyspark_spark.operators import graph
 
     o = load(spark, sf, "orders").select("o_orderkey", "o_custkey")
@@ -4114,8 +4114,8 @@ def q182_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
                   cust.c_nationkey == F.col("n_nationkey"))
         .select((F.col("c_custkey") * 2).alias("node"))
     )
-    pr = graph.personalized_pagerank(
-        edges, sources, iters=3, assume_distinct=True
+    pr = graph.pagerank_fixedpoint(
+        edges, sources=sources, iters=3, assume_distinct=True
     )
     return (
         pr.orderBy(F.desc("pr"), F.asc("node"))
@@ -7390,7 +7390,7 @@ FROM (SELECT node, pr FROM pr{iters} ORDER BY pr DESC, node ASC LIMIT 20)
 
 def _ppr_sql(iters: int = 3, scale: int = 1_000_000_000_000) -> str:
     """Unrolled personalized-PageRank oracle: the SAME recurrence as
-    operators/graph.personalized_pagerank over the q109 trade graph
+    operators/graph.pagerank_fixedpoint(sources=...) over the q109 trade graph
     with NATION_7's customers as the seed set — teleport mass lands
     only on seeds, rank seeds-only at t=0, everything BIGINT floor
     division (the _pagerank_sql argument, personalized)."""

@@ -32,15 +32,23 @@ Scale posture (100 TB corpus, k in the hundreds):
 - the update is posexplode → groupBy (cluster, pos): map-side
   combine reduces to k·dim rows crossing the wire per iteration;
 - per-iteration state is the k×dim centroid frame — metadata-class;
-  the quantized point set is cached once and reused every iteration;
-- iterations compose lazily; for long runs pass ``checkpoint_every``
-  to truncate lineage (the graph.py discipline — short runs must not
-  pay per-iteration block-storage materialization).
+  the quantized point set is cached once (``_fitted``), reused every
+  iteration and released on every exit, errors included;
+- iterations compose lazily with no mid-loop truncation: per-iteration
+  centroid localCheckpoints cut q142's job count 31→21 but raised its
+  wall time 2.35→3.22 s (round 13, min-of-5) — the k-row block
+  materializations serialize on block-store latency while the nested
+  broadcast recompute is pipelined codegen over the cached point set.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ._cache import _cached
 
 
 def kmeans_fixedpoint(
@@ -51,7 +59,6 @@ def kmeans_fixedpoint(
     quant: int = 1_000_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Lloyd's k-means in exact integer arithmetic; returns the final
     assignment ``(pid, cluster, d2)`` — one row per input vector,
@@ -60,40 +67,40 @@ def kmeans_fixedpoint(
 
     ``iters`` centroid updates are performed, then one final
     assignment against the last centroids (assign → update ×iters →
-    assign).
+    assign)."""
+    with _fitted(emb, k, iters, quant, id_col, vec_col) as (pts, cent):
+        # force the |n|-row assignment once, before the cached point set
+        # is released
+        return _assign(pts, cent).select("pid", "cluster", "d2").localCheckpoint(eager=True)
 
-    ``checkpoint_every`` stays 0 by default — measured in round 13:
-    per-iteration centroid localCheckpoints cut the Spark JOB count
-    (each iteration's broadcast subtree nests every earlier one, so
-    truncation stops the nested re-runs: q142 31→21 jobs) but RAISE
-    wall time (q142 2.35→3.22 s, q192 2.00→2.17 s min-of-5): the k-row
-    block materializations serialize on block-store latency while the
-    nested broadcast recompute is pipelined codegen over the cached
-    point set. Pass a positive value only for long fixed-point runs
-    where lineage depth itself becomes the problem."""
-    pts = emb.select(
+
+def _quantized(emb: DataFrame, quant: int, id_col: str, vec_col: str) -> DataFrame:
+    """(pid, qv): every component as ``floor(double(x) * quant)``."""
+    return emb.select(
         F.col(id_col).alias("pid"),
         F.expr(
             f"transform({vec_col}, x -> cast(floor(cast(x as double) * {quant}) as bigint))"
         ).alias("qv"),
-    ).cache()
-
-    # seeds: the k lowest-id vectors, numbered 0..k-1 in id order —
-    # a TakeOrdered of k rows, then a window over those k rows only
-    seeds = pts.orderBy("pid").limit(k)
-    cent = seeds.select(
-        (F.row_number().over(Window.orderBy("pid")) - 1).alias("cid"),
-        F.col("qv").alias("cv"),
     )
 
-    cent = _lloyd_centroids(pts, cent, iters, checkpoint_every)
 
-    # force the |n|-row assignment once, then release the cached point
-    # set so repeated calls in a long-lived session don't accumulate
-    # storage (the pagerank_fixedpoint discipline)
-    out = _assign(pts, cent).select("pid", "cluster", "d2").localCheckpoint(eager=True)
-    pts.unpersist()
-    return out
+@contextmanager
+def _fitted(
+    emb: DataFrame, k: int, iters: int, quant: int, id_col: str, vec_col: str
+) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """The shared k-means fit: quantize and cache the point set, seed,
+    run the Lloyd updates, and yield the cached points with the lazy
+    final centroids. The point set is released when the block ends, so
+    callers force their result inside it."""
+    with _cached(_quantized(emb, quant, id_col, vec_col)) as pts:
+        # seeds: the k lowest-id vectors, numbered 0..k-1 in id order —
+        # a TakeOrdered of k rows, then a window over those k rows only
+        seeds = pts.orderBy("pid").limit(k)
+        cent = seeds.select(
+            (F.row_number().over(Window.orderBy("pid")) - 1).alias("cid"),
+            F.col("qv").alias("cv"),
+        )
+        yield pts, _lloyd_centroids(pts, cent, iters)
 
 
 def _all_distances(pts: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -129,12 +136,10 @@ def _assign(pts: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def _lloyd_centroids(
-    pts: DataFrame, cent: DataFrame, iters: int, checkpoint_every: int = 0
-) -> DataFrame:
+def _lloyd_centroids(pts: DataFrame, cent: DataFrame, iters: int) -> DataFrame:
     """``iters`` exact-integer Lloyd centroid updates (see module
     docstring for the determinism contract)."""
-    for it in range(iters):
+    for _ in range(iters):
         assigned = _assign(pts, cent)
         sums = (
             assigned.select("cluster", F.posexplode("qv").alias("pos", "v"))
@@ -159,8 +164,6 @@ def _lloyd_centroids(
             cent.join(new_cent, "cid", "left")
             .select("cid", F.coalesce("cv_new", "cv").alias("cv"))
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and (it + 1) < iters:
-            cent = cent.localCheckpoint(eager=False)
     return cent
 
 
@@ -190,51 +193,38 @@ def kmeans_separation(
     centroids), one groupBy(pid) then one groupBy(cluster) — no extra
     corpus pass beyond the fit. The oracle re-runs the unrolled Lloyd
     chain and reads best/second-best as row_number 1 and 2."""
-    pts = emb.select(
-        F.col(id_col).alias("pid"),
-        F.expr(
-            f"transform({vec_col}, x -> cast(floor(cast(x as double) * {quant}) as bigint))"
-        ).alias("qv"),
-    ).cache()
-    seeds = pts.orderBy("pid").limit(k)
-    cent = seeds.select(
-        (F.row_number().over(Window.orderBy("pid")) - 1).alias("cid"),
-        F.col("qv").alias("cv"),
-    )
-    cent = _lloyd_centroids(pts, cent, iters)
-    both = (
-        _all_distances(pts, cent)
-        .groupBy("pid")
-        .agg(F.array_sort(F.collect_list(F.struct("d2", "cid"))).alias("ds"))
-        .select(
-            "pid",
-            F.col("ds")[0]["cid"].alias("cluster"),
-            F.col("ds")[0]["d2"].alias("a2"),
-            F.col("ds")[1]["d2"].alias("b2"),
+    with _fitted(emb, k, iters, quant, id_col, vec_col) as (pts, cent):
+        both = (
+            _all_distances(pts, cent)
+            .groupBy("pid")
+            .agg(F.array_sort(F.collect_list(F.struct("d2", "cid"))).alias("ds"))
+            .select(
+                "pid",
+                F.col("ds")[0]["cid"].alias("cluster"),
+                F.col("ds")[0]["d2"].alias("a2"),
+                F.col("ds")[1]["d2"].alias("b2"),
+            )
         )
-    )
-    out = (
-        both.groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("a2").alias("sum_own_d2"),
-            F.sum("b2").alias("sum_next_d2"),
+        return (
+            both.groupBy("cluster")
+            .agg(
+                F.count(F.lit(1)).alias("n_points"),
+                F.sum("a2").alias("sum_own_d2"),
+                F.sum("b2").alias("sum_next_d2"),
+            )
+            .select(
+                "cluster",
+                "n_points",
+                "sum_own_d2",
+                "sum_next_d2",
+                F.when(
+                    F.col("sum_own_d2") > 0,
+                    F.col("sum_next_d2").cast("double") / F.col("sum_own_d2").cast("double"),
+                ).alias("separation"),
+            )
+            .orderBy("cluster")
+            .localCheckpoint(eager=True)
         )
-        .select(
-            "cluster",
-            "n_points",
-            "sum_own_d2",
-            "sum_next_d2",
-            F.when(
-                F.col("sum_own_d2") > 0,
-                F.col("sum_next_d2").cast("double") / F.col("sum_own_d2").cast("double"),
-            ).alias("separation"),
-        )
-        .orderBy("cluster")
-        .localCheckpoint(eager=True)
-    )
-    pts.unpersist()
-    return out
 
 
 def kcenter_sample(
@@ -272,12 +262,7 @@ def kcenter_sample(
     k-center objective value)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    pts = emb.select(
-        F.col(id_col).alias("pid"),
-        F.expr(
-            f"transform({vec_col}, x -> cast(floor(cast(x as double) * {quant}) as bigint))"
-        ).alias("qv"),
-    ).localCheckpoint(eager=False)
+    pts = _quantized(emb, quant, id_col, vec_col).localCheckpoint(eager=False)
 
     seed = pts.orderBy("pid").first()
     if seed is None:

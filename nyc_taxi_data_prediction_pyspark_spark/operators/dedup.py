@@ -1035,7 +1035,10 @@ def semdedup(
         emb, k=k, iters=iters, quant=quant, id_col=id_col, vec_col=vec_col
     ).select("pid", "cluster")
     vecs = emb.select(F.col(id_col).alias("pid"), as_double(vec_col).alias("__v"))
-    pts = asg.join(vecs, "pid").cache()  # consumed by both pair sides + output
+    # consumed by both pair sides + the output: computed once through a
+    # lazy localCheckpoint, not a cache — the result stays lazy, and a
+    # cache could only be released by forcing it (+6 jobs on q192)
+    pts = asg.join(vecs, "pid").localCheckpoint(eager=False)
     a = pts.select(
         F.col("pid").alias("id_a"), "cluster", F.col("__v").alias("__va")
     )
@@ -1304,9 +1307,10 @@ def coverage_greedy_selection(
     outside the pool on both engines. No floats anywhere.
 
     Scale shape: the shingle frame is built once and localCheckpointed
-    (the pagerank_fixedpoint loop rule — graph.py:21); each round is
-    one anti-join against the covered set + one map-side-combinable
-    groupBy + a TakeOrdered(1), and the covered set is re-checkpointed
+    (lineage truncation, as graph.pagerank_fixedpoint does every
+    ``_TRUNCATE_EVERY`` iterations); each round is one anti-join
+    against the covered set + one map-side-combinable groupBy + a
+    TakeOrdered(1), and the covered set is re-checkpointed
     per round so the k-step lineage never re-derives earlier rounds.
     Work per round is O(|remaining shingle pairs|); k is a small
     constant. The greedy itself is inherently sequential — that is the

@@ -18,12 +18,15 @@ Scale posture (100 TB / 10^9-node graphs):
 - each iteration is therefore one |V| shuffle + one aggregation keyed
   on dst — O(|E|) scan work off the cache, no driver data motion;
 - rank state is one row per node (|V|, not |E|);
-- ``localCheckpoint`` every ``checkpoint_every`` iterations truncates
-  lineage so the plan stays O(K) however long the fixed-point runs
-  (the connected-components idiom), without paying per-iteration
-  block-storage materialization on short runs;
-- the single ``nodes.count()`` is quantizer-class metadata (one
-  scalar), used only to size the teleport constant.
+- ``localCheckpoint`` every ``_TRUNCATE_EVERY`` (4) iterations
+  truncates lineage so the plan stays O(K) however long the
+  fixed-point runs (the connected-components idiom); truncating every
+  iteration measured 12.1 s vs 4.0 s on q109;
+- the single fused setup sum (|V|, or |S| for a seed set) is
+  quantizer-class metadata (one scalar), used only to size the
+  teleport constant;
+- every cached frame lives in one ``_cache._cached`` block and is
+  released on every exit, errors included.
 
 Dangling nodes (no out-edges) leak their mass — the standard "leaky"
 variant; callers that need conservation should symmetrize the edge
@@ -32,193 +35,127 @@ set (as q109 does), which guarantees every node has out-degree ≥ 1.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, functions as F
 
+from ._cache import _cached
+
 SCALE = 1_000_000_000_000  # pico-units: sum of initial ranks == SCALE
+# PageRank lineage truncation period: a localCheckpoint every iteration
+# measured 12.1 s vs 4.0 s without (q109 trade graph, sf0.1, min-of-3).
+_TRUNCATE_EVERY = 4
 
 
 def pagerank_fixedpoint(
     edges: DataFrame,
     *,
+    sources: DataFrame | None = None,
     src: str = "src",
     dst: str = "dst",
     iters: int = 3,
     damping_pct: int = 85,
-    checkpoint: bool = True,
-    checkpoint_every: int = 4,
     assume_distinct: bool = False,
 ) -> DataFrame:
-    """Fixed-point PageRank: pr_{k+1}(v) = teleport + (d·Σ_{u→v} pr_k(u) div deg(u)) div 100
-    with teleport = ((100−d)·(SCALE div N)) div 100, all in BIGINT floor
+    """Fixed-point PageRank over the seed set S, all in BIGINT floor
     division. Returns (node, pr) — pr in pico-units.
+
+        pr_0(v)     = (SCALE div |S|) · [v ∈ S]
+        pr_{k+1}(v) = [v ∈ S]·(((100-d)·(SCALE div |S|)) div 100)
+                      + (d·Σ_{u→v} pr_k(u) div deg(u)) div 100
+
+    ``sources=None`` makes every node a seed (S = V): the global
+    recurrence, with teleport = ((100−d)·(SCALE div N)) div 100.
+    A 1-column ``sources`` frame of seed node ids gives personalized
+    (topic-sensitive) PageRank — ALL teleport mass returns to the seed
+    set, the similarity-to-a-seed-set ranking recommender /
+    related-entity queries use (Haveliwala, WWW'02). Seeds with no
+    edges are unioned into the node set and keep their teleport mass;
+    the seed flag rides the cached nodes frame (one hash join at build
+    time, zero per iteration). Raises ``ValueError`` when the node set
+    or the seed set is empty (no rank mass to spread).
 
     ``assume_distinct=True`` skips the defensive edge dedup (one full
     |E| shuffle) when the caller guarantees edge uniqueness — e.g. it
     built the edge set from a ``.distinct()`` pair frame, as q109 does.
 
-    ``checkpoint_every``: lineage is truncated every K iterations, not
-    every iteration. Measured on the q109 trade graph (sf0.1, min-of-3):
-    per-iteration localCheckpoint costs 12.1 s wall vs 4.0 s without —
-    each checkpoint materializes the |V| frame to block storage, and on
-    a 3-iteration run that storage traffic IS the query. A depth-K
-    lineage (K·2 joins + K aggs) is well inside Catalyst's comfort
-    zone, so checkpoint only when the plan would otherwise grow
-    unbounded (long fixed-point runs), and always force+release at the
-    end. The 100 TB posture is unchanged: plan size is O(K), executor
-    storage holds at most one checkpointed |V| frame per K iterations."""
+    Lineage is truncated every ``_TRUNCATE_EVERY`` iterations, not
+    every iteration: on a 3-iteration run the per-iteration block
+    storage traffic IS the query, and a depth-K lineage (K·2 joins + K
+    aggs) is well inside Catalyst's comfort zone. The final frame is
+    always forced before the caches are released."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_distinct:
         e = e.distinct()
-    # Transient edge cache: nodes, outdeg and fanout all consume the
-    # (possibly expensive) upstream edge plan — without this cache each
-    # build re-runs it from the source. It is released as soon as the
-    # durable frames are forced, so peak extra storage is one |E| pass
-    # during setup, not for the iteration phase.
-    e = e.cache()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .cache()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # (src, dst, deg) built once, hash-partitioned on the probe key and
-    # cached: the per-iteration join then re-shuffles only the rank
-    # frame (|V| rows) — the cached scan keeps its HashPartitioning.
-    fanout = e.join(outdeg, "src").repartition("src").cache()
+    with ExitStack() as held:
+        # Transient edge cache: nodes, outdeg and fanout all consume the
+        # (possibly expensive) upstream edge plan — without this cache
+        # each build re-runs it from the source. It is released as soon
+        # as the durable frames are forced, so peak extra storage is one
+        # |E| pass during setup, not for the iteration phase.
+        with _cached(e) as e:
+            nodes = e.select(F.col("src").alias("node")).union(
+                e.select(F.col("dst").alias("node"))
+            )
+            if sources is None:
+                is_src = F.lit(True)
+                nodes = nodes.distinct()
+            else:
+                is_src = F.col("__is_src")
+                s = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
+                nodes = (
+                    nodes.union(s)
+                    .distinct()
+                    .join(s.withColumn("__is_src", F.lit(True)), "node", "left")
+                    .select("node", F.coalesce("__is_src", F.lit(False)).alias("__is_src"))
+                )
+            nodes = held.enter_context(_cached(nodes))
+            outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+            # (src, dst, deg) built once, hash-partitioned on the probe
+            # key and cached: the per-iteration join then re-shuffles only
+            # the rank frame (|V| rows) — the cached scan keeps its
+            # HashPartitioning.
+            fanout = held.enter_context(
+                _cached(e.join(outdeg, "src").repartition("src"))
+            )
+            # ONE fused setup action: |S| is the sum of the seed flags
+            # riding the nodes frame (fanout rows add 0), so a union-agg
+            # scan returns the constant AND forces both caches in a
+            # single job, before the edge cache is dropped.
+            n_seeds = (
+                nodes.select(is_src.cast("bigint").alias("__f"))
+                .unionByName(fanout.select(F.lit(0).cast("bigint").alias("__f")))
+                .agg(F.sum("__f"))
+                .collect()[0][0]
+            )
+        if not n_seeds:
+            raise ValueError(
+                "pagerank_fixedpoint: "
+                + ("empty node set" if sources is None else "empty seed set")
+            )
+        base = SCALE // n_seeds
+        teleport = ((100 - damping_pct) * base) // 100
 
-    # ONE fused setup action (round-14, verdict 3a): nodes rows carry
-    # flag 1 and fanout rows flag 0, so the sum IS |V| while the scan
-    # forces BOTH caches in a single job — the two-action form
-    # (nodes.count() then fanout.count()) paid an extra job for the
-    # same passes.  Cache lifetime unchanged: e is dropped immediately
-    # after, exactly as before.
-    n_nodes = (
-        nodes.select(F.lit(1).cast("bigint").alias("__f"))
-        .unionByName(fanout.select(F.lit(0).cast("bigint").alias("__f")))
-        .agg(F.sum("__f"))
-        .collect()[0][0]
-    )
-    e.unpersist()
-    base = SCALE // n_nodes
-    teleport = ((100 - damping_pct) * base) // 100
-
-    pr = nodes.withColumn("pr", F.lit(base).cast("bigint"))
-    for k in range(iters):
-        contrib = (
-            fanout.join(pr, fanout["src"] == pr["node"])
-            .select(F.col("dst"), F.expr("pr div deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("recv"))
+        pr = nodes.select(
+            "node", F.when(is_src, F.lit(base)).otherwise(F.lit(0)).cast("bigint").alias("pr")
         )
-        pr = nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.expr(f"({damping_pct} * coalesce(recv, 0L)) div 100")
-            ).cast("bigint").alias("pr"),
-        )
-        if checkpoint and checkpoint_every and (k + 1) % checkpoint_every == 0 and (k + 1) < iters:
-            pr = pr.localCheckpoint(eager=False)
-    if checkpoint:
-        # force the final frame once, then release executor storage so
-        # repeated calls in a long-lived session (bench loops, notebook
-        # reuse) don't accumulate cached blocks.
-        pr = pr.localCheckpoint(eager=True)
-        nodes.unpersist()
-        fanout.unpersist()
-    return pr
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    sources: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    damping_pct: int = 85,
-    checkpoint: bool = True,
-    checkpoint_every: int = 4,
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """Personalized (topic-sensitive) PageRank: identical fixed-point
-    BIGINT recurrence to ``pagerank_fixedpoint``, except ALL teleport
-    mass returns to the SOURCE set — the similarity-to-a-seed-set
-    ranking recommender / related-entity queries use (Haveliwala,
-    WWW'02). ``sources`` is a 1-column frame of seed node ids.
-
-        pr_0(v)    = (SCALE div |S|) · [v ∈ S]
-        pr_{k+1}(v) = [v ∈ S]·(((100-d)·(SCALE div |S|)) div 100)
-                      + (d·Σ_{u→v} pr_k(u) div deg(u)) div 100
-
-    All floor division ⇒ an unrolled SQL oracle value-hash-checks the
-    iterative run (the q109 argument). Scale shape matches the global
-    variant: the fanout frame is built/cached once, each iteration
-    shuffles only |V| rank rows, the source membership flag rides the
-    cached nodes frame (one hash join at build time, zero per
-    iteration). Isolated seeds (sources with no edges) keep their
-    teleport mass — they are unioned into the node set."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    e = e.cache()
-    s = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .union(s)
-        .distinct()
-        .join(s.withColumn("__is_src", F.lit(True)), "node", "left")
-        .select("node", F.coalesce("__is_src", F.lit(False)).alias("__is_src"))
-        .cache()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    fanout = e.join(outdeg, "src").repartition("src").cache()
-
-    # ONE fused setup action (round-14, verdict 3a): |S| is the sum of
-    # the __is_src flags riding the nodes frame, so a union-agg scan
-    # returns the constant AND forces nodes + fanout in a single job.
-    # This also fixes a latent recompute: the old form (s.count() +
-    # fanout.count()) never forced the NODES cache before dropping the
-    # edge cache, so nodes materialized at iteration 1 by re-running
-    # the edge dedup from source.
-    n_src = (
-        nodes.select(F.col("__is_src").cast("bigint").alias("__f"))
-        .unionByName(fanout.select(F.lit(0).cast("bigint").alias("__f")))
-        .agg(F.sum("__f"))
-        .collect()[0][0]
-    )
-    e.unpersist()
-    base = SCALE // n_src
-    teleport = ((100 - damping_pct) * base) // 100
-    tel_col = F.when(F.col("__is_src"), F.lit(teleport)).otherwise(F.lit(0))
-
-    pr = nodes.withColumn(
-        "pr", F.when(F.col("__is_src"), F.lit(base)).otherwise(F.lit(0)).cast("bigint")
-    ).select("node", "__is_src", "pr")
-    for k in range(iters):
-        contrib = (
-            fanout.join(pr, fanout["src"] == pr["node"])
-            .select(F.col("dst"), F.expr("pr div deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("recv"))
-        )
-        pr = nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
-            "node",
-            "__is_src",
-            (
-                tel_col + F.expr(f"({damping_pct} * coalesce(recv, 0L)) div 100")
-            ).cast("bigint").alias("pr"),
-        )
-        if checkpoint and checkpoint_every and (k + 1) % checkpoint_every == 0 and (k + 1) < iters:
-            pr = pr.localCheckpoint(eager=False)
-    pr = pr.select("node", "pr")
-    if checkpoint:
-        pr = pr.localCheckpoint(eager=True)
-        nodes.unpersist()
-        fanout.unpersist()
-    return pr
+        for k in range(iters):
+            contrib = (
+                fanout.join(pr, fanout["src"] == pr["node"])
+                .select(F.col("dst"), F.expr("pr div deg").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("recv"))
+            )
+            pr = nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
+                "node",
+                (
+                    F.when(is_src, F.lit(teleport)).otherwise(F.lit(0))
+                    + F.expr(f"({damping_pct} * coalesce(recv, 0L)) div 100")
+                ).cast("bigint").alias("pr"),
+            )
+            if (k + 1) % _TRUNCATE_EVERY == 0 and (k + 1) < iters:
+                pr = pr.localCheckpoint(eager=False)
+        return pr.localCheckpoint(eager=True)
 
 
 def triangle_count(
@@ -403,24 +340,21 @@ def bfs_levels(
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_distinct:
         e = e.distinct()
-    e = e.repartition("src").cache()
-
     frontier = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
     frontier = frontier.localCheckpoint(eager=False)
     visited = frontier.withColumn("hop", F.lit(0).cast("int"))
-    for k in range(1, max_hops + 1):
-        nxt = (
-            e.join(frontier, e["src"] == frontier["node"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        visited = visited.union(nxt.withColumn("hop", F.lit(k).cast("int")))
-        frontier = nxt
-    out = visited.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    with _cached(e.repartition("src")) as e:
+        for k in range(1, max_hops + 1):
+            nxt = (
+                e.join(frontier, e["src"] == frontier["node"])
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .localCheckpoint(eager=False)
+            )
+            visited = visited.union(nxt.withColumn("hop", F.lit(k).cast("int")))
+            frontier = nxt
+        return visited.localCheckpoint(eager=True)
 
 
 def kcore_peel(
@@ -595,41 +529,39 @@ def label_propagation(
     # broadcasts either way; the one extra setup exchange replaces
     # iters×|E| exchanges at scale.  The cache is dropped after the
     # final labels are eagerly materialized below.
-    e = e.repartition("dst").cache()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    lab = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(iters):
-        nb = (
-            e.join(
-                lab.select(F.col("node").alias("dst"), "label"), "dst"
-            )
-            .groupBy(F.col("src").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        best = (
-            nb.groupBy("node")
-            .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("b"))
-            .select("node", (-F.col("b.nl")).alias("label"))
-        )
-        lab = (
-            nodes.join(best, "node", "left")
-            .select(
-                "node",
-                F.coalesce("label", F.col("node")).cast("bigint").alias("label"),
-            )
+    with _cached(e.repartition("dst")) as e:
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
             .localCheckpoint(eager=False)
         )
-    # force the final frame once, then release the edge cache (the
-    # pagerank lifecycle: repeated calls in a long-lived session must
-    # not accumulate cached |E| blocks)
-    lab = lab.localCheckpoint(eager=True)
-    e.unpersist()
-    return lab
+        lab = nodes.select("node", F.col("node").alias("label"))
+        for _ in range(iters):
+            nb = (
+                e.join(
+                    lab.select(F.col("node").alias("dst"), "label"), "dst"
+                )
+                .groupBy(F.col("src").alias("node"), "label")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            best = (
+                nb.groupBy("node")
+                .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("b"))
+                .select("node", (-F.col("b.nl")).alias("label"))
+            )
+            lab = (
+                nodes.join(best, "node", "left")
+                .select(
+                    "node",
+                    F.coalesce("label", F.col("node")).cast("bigint").alias("label"),
+                )
+                .localCheckpoint(eager=False)
+            )
+        # force the final frame once before the edge cache is released:
+        # repeated calls in a long-lived session must not accumulate
+        # cached |E| blocks
+        return lab.localCheckpoint(eager=True)
 
 
 def degree_assortativity(
@@ -772,32 +704,36 @@ def temporal_reachability(
     e = edges.select(
         F.col(src).alias("__s"), F.col(dst).alias("__d"), F.col(t).cast("bigint").alias("__t")
     ).distinct()
-    e = e.repartition("__s").cache()
     arr = sources.select(
         F.col(sources.columns[0]).alias("node"), F.lit(0).cast("bigint").alias("arr")
     ).distinct()
     stats = []
-    for rnd in range(1, max_hops + 1):
-        relax = (
-            arr.join(e, arr.node == e.__s)
-            .where(F.col("__t") >= F.col("arr"))
-            .select(F.col("__d").alias("node"), F.col("__t").alias("arr"))
-        )
-        arr = (
-            arr.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("arr").alias("arr"))
-            .localCheckpoint(eager=False)
-        )
-        stats.append(
-            arr.agg(
-                F.lit(rnd).alias("round"),
-                F.count(F.lit(1)).cast("bigint").alias("n_reached"),
-                F.min("arr").cast("bigint").alias("min_arrival"),
-                F.max("arr").cast("bigint").alias("max_arrival"),
-                F.sum(F.col("arr").cast("decimal(38,0)")).alias("sum_arrival"),
+    # the edge cache is read only while the rounds are built: with AQE
+    # each round's lazy localCheckpoint runs its join + min-combine
+    # shuffle stages as it is created, and the per-round stats read
+    # only the checkpointed arrivals
+    with _cached(e.repartition("__s")) as e:
+        for rnd in range(1, max_hops + 1):
+            relax = (
+                arr.join(e, arr.node == e.__s)
+                .where(F.col("__t") >= F.col("arr"))
+                .select(F.col("__d").alias("node"), F.col("__t").alias("arr"))
             )
-        )
+            arr = (
+                arr.unionByName(relax)
+                .groupBy("node")
+                .agg(F.min("arr").alias("arr"))
+                .localCheckpoint(eager=False)
+            )
+            stats.append(
+                arr.agg(
+                    F.lit(rnd).alias("round"),
+                    F.count(F.lit(1)).cast("bigint").alias("n_reached"),
+                    F.min("arr").cast("bigint").alias("min_arrival"),
+                    F.max("arr").cast("bigint").alias("max_arrival"),
+                    F.sum(F.col("arr").cast("decimal(38,0)")).alias("sum_arrival"),
+                )
+            )
     out = stats[0]
     for s in stats[1:]:
         out = out.unionByName(s)
@@ -851,24 +787,22 @@ def weighted_sssp(
     )
     # parallel edges: only the cheapest can ever win a relaxation
     e = e.groupBy("__s", "__d").agg(F.min("__w").alias("__w"))
-    e = e.repartition("__s").cache()
     dist = sources.select(
         F.col(sources.columns[0]).alias("node"), F.lit(0).cast("bigint").alias("dist")
     ).distinct()
-    for _ in range(max_hops):
-        relax = (
-            dist.join(e, dist.node == e.__s)
-            .select(F.col("__d").alias("node"), (F.col("dist") + F.col("__w")).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    out = dist.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    with _cached(e.repartition("__s")) as e:
+        for _ in range(max_hops):
+            relax = (
+                dist.join(e, dist.node == e.__s)
+                .select(F.col("__d").alias("node"), (F.col("dist") + F.col("__w")).alias("dist"))
+            )
+            dist = (
+                dist.unionByName(relax)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+                .localCheckpoint(eager=False)
+            )
+        return dist.localCheckpoint(eager=True)
 
 
 def modularity(

@@ -211,14 +211,6 @@ def ngrams_from_tokens(tokens: Column | str, n: int = 2) -> Column:
     return F.when(cnt > 0, grams).otherwise(empty)
 
 
-def ngram_list(text: Column | str, n: int = 2) -> Column:
-    """n-grams straight from a text column — convenience wrapper for
-    ONE-SHOT expression contexts.  Hot paths should materialize the
-    token array and use ``ngrams_from_tokens`` (see its docstring)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return ngrams_from_tokens(F.split(normalize_text(c), " "), n)
-
-
 def repetition_signals(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", n: int = 2
 ) -> DataFrame:

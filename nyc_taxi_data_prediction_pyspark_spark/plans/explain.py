@@ -21,10 +21,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def partition_filters(df: DataFrame) -> list[str]:
     """Partition-pruning predicates that reached a file scan — the
     evidence that a hive-partitioned probe touches few directories."""

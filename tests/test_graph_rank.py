@@ -4,6 +4,7 @@ that make iterative and skewed-group algorithms oracle-checkable."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window as W, functions as F
 
 from nyc_taxi_data_prediction_pyspark_spark.catalog import load
@@ -60,6 +61,33 @@ def test_pagerank_symmetric_graph_conserves_mass(spark):
     assert total >= graph.SCALE - n * iters * steps_per_iter * 100
 
 
+def test_pagerank_all_nodes_as_seeds_equals_global(spark):
+    """S = V reduces the seeded recurrence to the global one bit for bit."""
+    edges = [("a", "b"), ("b", "a"), ("b", "c"), ("c", "a"), ("d", "c")]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    seeds = spark.createDataFrame([(v,) for v in "abcd"], ["node"])
+    glob = sorted(map(tuple, graph.pagerank_fixedpoint(df, iters=3).collect()))
+    seeded = sorted(
+        map(tuple, graph.pagerank_fixedpoint(df, sources=seeds, iters=3).collect())
+    )
+    assert glob == seeded == sorted(_pagerank_reference(edges, iters=3).items())
+
+
+def test_pagerank_empty_node_set_raises(spark):
+    df = spark.createDataFrame([], "src string, dst string")
+    with pytest.raises(ValueError, match="empty node set"):
+        graph.pagerank_fixedpoint(df, iters=3)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pagerank_empty_seed_set_raises(spark):
+    df = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
+    seeds = spark.createDataFrame([], "node string")
+    with pytest.raises(ValueError, match="empty seed set"):
+        graph.pagerank_fixedpoint(df, sources=seeds, iters=3)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def _ppr_reference(edges, sources, iters=3, damping_pct=85):
     """Driver-side integer personalized-PageRank recurrence."""
     nodes = sorted({u for u, _ in edges} | {v for _, v in edges} | set(sources))
@@ -92,7 +120,7 @@ def test_personalized_pagerank_matches_integer_reference(spark):
     srcs = spark.createDataFrame([("a",), ("e",)], ["node"])
     got = {
         r["node"]: r["pr"]
-        for r in graph.personalized_pagerank(df, srcs, iters=3).collect()
+        for r in graph.pagerank_fixedpoint(df, sources=srcs, iters=3).collect()
     }
     assert got == _ppr_reference(edges, ["a", "e"], iters=3)
 
@@ -105,7 +133,7 @@ def test_personalized_pagerank_isolated_seed_keeps_teleport_mass(spark):
     srcs = spark.createDataFrame([("z",)], ["node"])  # not in the graph
     got = {
         r["node"]: r["pr"]
-        for r in graph.personalized_pagerank(df, srcs, iters=2).collect()
+        for r in graph.pagerank_fixedpoint(df, sources=srcs, iters=2).collect()
     }
     ref = _ppr_reference(edges, ["z"], iters=2)
     assert got == ref

@@ -894,8 +894,8 @@ def test_personalized_pagerank_property(spark_h, raw_edges, seeds):
     sdf = spark_h.createDataFrame([(s,) for s in seed_names], ["node"])
     got = {
         r["node"]: r["pr"]
-        for r in graph.personalized_pagerank(
-            df, sdf, iters=3, assume_distinct=True
+        for r in graph.pagerank_fixedpoint(
+            df, sources=sdf, iters=3, assume_distinct=True
         ).collect()
     }
     assert got == _ppr_reference(edges, seed_names, iters=3)
